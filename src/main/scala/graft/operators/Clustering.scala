@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.NumericType
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
@@ -120,30 +121,40 @@ object Clustering {
     * partition order cannot matter) — replacing the earlier
     * groupBy-seeds + broadcast-join + collect pair (two jobs plus a
     * broadcast build) with the same bounded k-row result, bit-equal
-    * seeds included. */
+    * seeds included.
+    *
+    * Numeric ids take that rule verbatim. Any other id type (graft's
+    * default `uuid()` string ids) cannot be cast to long, so it seeds by
+    * the residue of a stable hash (`pmod(xxhash64(id), k)`) and breaks
+    * ties by the smallest id string. */
   def initCentroids(emb: DataFrame, k: Int, idCol: String, vecCol: String): Array[Array[Float]] = {
+    val numeric = emb.schema(idCol).dataType.isInstanceOf[NumericType]
+    val (key, residue) =
+      if (numeric) (col(idCol).cast("long"), col(idCol).cast("long") % k)
+      else (col(idCol).cast("string"), pmod(xxhash64(col(idCol).cast("string")), lit(k.toLong)))
+    val before: (Row, Row) => Boolean =
+      if (numeric) (a, b) => a.getLong(0) < b.getLong(0)
+      else (a, b) => a.getString(0) < b.getString(0)
     val out = emb
-      .select(col(idCol).cast("long").as("_id"),
+      .select(key.as("_id"), residue.cast("int").as("_r"),
         col(vecCol).cast("array<float>").as("_v"))
       .rdd.mapPartitions { it =>
-        val best = Array.fill[(Long, Array[Float])](k)(null)
+        val best = Array.fill[Row](k)(null)
         it.foreach { r =>
-          val id = r.getLong(0)
-          val j = (id % k).toInt
-          if (best(j) == null || id < best(j)._1)
-            best(j) = (id, r.getSeq[Float](1).toArray)
+          val j = r.getInt(1)
+          if (best(j) == null || before(r, best(j))) best(j) = r
         }
         Iterator.single(best)
       }.reduce { (a, b) =>
         var j = 0
         while (j < k) {
-          if (a(j) == null || (b(j) != null && b(j)._1 < a(j)._1)) a(j) = b(j)
+          if (a(j) == null || (b(j) != null && before(b(j), a(j)))) a(j) = b(j)
           j += 1
         }
         a
       }
     require(out.forall(_ != null), s"k=$k needs every residue class inhabited")
-    out.map(_._2)
+    out.map(_.getSeq[Float](2).toArray)
   }
 
   /** One Lloyd update. ONE narrow mapPartitions job accumulating

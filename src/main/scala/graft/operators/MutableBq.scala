@@ -1,131 +1,77 @@
 package graft.operators
 
-import graft.store.{MutableCollection, StoreFs, VectorStore}
+import graft.store.VectorStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** BINARY-QUANTIZED search over a LIVE mutable collection — the
-  * [[MutableIvf]]/[[MutableSq]] merge-on-read discipline for the
-  * cheapest index family: every row VERSION stores dim/8 bytes of sign
-  * signatures (+ the collection's metadata and seq), deletes need no
-  * maintenance (the shared tombstone filter resolves versions at
-  * search), upserts reach the index through an O(delta) seq-pruned
-  * [[refresh]], and consistency is point-in-time at the indexed
-  * watermark.
+  * cheapest member of the [[MutableIndex]] tier: every row VERSION
+  * stores dim/8 bytes of sign signatures (+ the collection's metadata
+  * and seq).
   *
   * BQ is the simplest member of the matrix because its quantizer is
-  * TRAIN-FREE (sign bits at zero): attach persists no learned artifact,
-  * refresh cannot drift, and there is no router — the pre-rank is a
-  * map-only Hamming scan of the live signatures into a TakeOrdered
-  * (16 bytes/version at 100 TB), not a partition-pruned probe. The
-  * exact-cosine rerank fetches the rerank·k shortlist's CURRENT vectors
-  * from the collection's live view by id (broadcast semi-join — the
-  * bounded [[Similarity.bqSearchStored]] shape over the mutable tier).
+  * TRAIN-FREE (sign bits at zero): attach persists no learned artifact
+  * (only the signature dim), refresh cannot drift, and there is no
+  * router — the pre-rank is a map-only Hamming scan of the live
+  * signatures into a TakeOrdered (16 bytes/version at 100 TB), not a
+  * partition-pruned probe. The exact-cosine rerank fetches the
+  * rerank·k shortlist's CURRENT vectors from the collection's live view
+  * by id (broadcast semi-join — the bounded
+  * [[Similarity.bqSearchStored]] shape over the mutable tier).
   *
   * Everything is deterministic (sign tests, integer XOR/popcount,
   * (hamming, id) / (cosine desc, id) orders), so the live search sits
   * under a FULL gate hash like its immutable siblings. */
 object MutableBq {
 
-  private val WatermarkFile = "_indexed.properties"
-  private val MetaFile = "_bq_meta.properties"
+  private val family = new MutableIndex.Family[Int](
+      "bq", "_bq_meta.properties", "meta", Nil) {
+    /** every collection column except the raw vector, plus (bq_lo,
+      * bq_hi), in ONE map-only select */
+    def encode(rows: DataFrame, vecCol: String, dim: Int): DataFrame = {
+      val (lo, hi) = Similarity.bqEncodeExprs(col(vecCol), dim)
+      rows.withColumn("bq_lo", lo).withColumn("bq_hi", hi).drop(vecCol)
+    }
+    protected def putFields(props: java.util.Properties, dim: Int): Unit =
+      props.setProperty("dim", dim.toString)
+    protected def getFields(props: java.util.Properties): Int =
+      props.getProperty("dim").toInt
+  }
 
   /** Build the signature index over the collection's current rows (all
     * versions) and record the indexed watermark. */
   def attach(spark: SparkSession, store: VectorStore, collection: String,
-             vecCol: String, index: String, dim: Int = 64): Unit = {
-    val mc = store.mutable(collection)
-    val watermark = mc.currentSeq // BEFORE reading — the family rule
-    val raw = store.read(spark, collection)
-    store.create(index, encodeRows(raw, vecCol, dim))
-    writeMeta(store, index, vecCol, mc.idCol, dim)
-    writeWatermark(store, index, watermark, collection)
-  }
-
-  /** Signature projection for index rows — every collection column
-    * except the raw vector, plus (bq_lo, bq_hi), in ONE map-only
-    * select. One seam for attach and refresh. */
-  private def encodeRows(rows: DataFrame, vecCol: String, dim: Int): DataFrame = {
-    val (lo, hi) = Similarity.bqEncodeExprs(col(vecCol), dim)
-    rows.withColumn("bq_lo", lo).withColumn("bq_hi", hi).drop(vecCol)
-  }
+             vecCol: String, index: String, dim: Int = 64): Unit =
+    family.attach(spark, store, collection, vecCol, index)((_, _) => dim)
 
   /** Index the rows written since the last refresh — O(delta). */
   def refresh(spark: SparkSession, store: VectorStore,
-              collection: String, index: String): Long = {
-    val mc = store.mutable(collection)
-    val from = readWatermark(store, index)
-    val to = mc.currentSeq
-    if (to == from) return to
-    val (vecCol, _, dim) = readMeta(store, index)
-    val delta = store.read(spark, collection)
-      .filter(col(MutableCollection.SeqCol) > from &&
-        col(MutableCollection.SeqCol) <= to)
-    store.append(index, encodeRows(delta, vecCol, dim))
-    writeWatermark(store, index, to, collection) // AFTER the append — crash model
-    to
-  }
+              collection: String, index: String): Long =
+    family.refresh(spark, store, collection, index)
 
   /** Top-k over the live collection as of the index watermark: Hamming
-    * pre-rank over live signature versions (tombstone filter + where +
-    * crash-duplicate dedup BEFORE the shortlist cut, so the rerank·k
-    * candidates are all live), exact-cosine rerank against the
-    * collection's live vectors. Returns (idCol, hamming, cosine). */
+    * pre-rank over live signature versions (version resolution + where
+    * BEFORE the shortlist cut, so the rerank·k candidates are all live),
+    * exact-cosine rerank against the collection's live vectors. Returns
+    * (idCol, hamming, cosine). */
   def search(spark: SparkSession, store: VectorStore, collection: String,
              index: String, qv: Array[Float], k: Int, rerank: Int = 4,
              where: Option[String] = None): DataFrame = {
     import graft.functions.VectorFunctions.{cosine, vecLit}
-    val mc = store.mutable(collection)
-    val (vecCol, idCol, dim) = readMeta(store, index)
-    val w = readWatermark(store, index)
-    val (qlo, qhi) = Similarity.bqPackLocal(qv, dim)
-    val cand = store.read(spark, index)
-      .filter(col(MutableCollection.SeqCol) <= w) // point-in-time bound
-    val live = mc.applyTombstoneFilter(spark, cand, asOf = Some(w))
-    val shortlist = where.fold(live)(j => live.filter(graft.query.WhereDsl.parse(j)))
-      .dropDuplicates(idCol) // crash-duplicate guard
-      .select(col(idCol),
+    val s = family.snapshot(store, collection, index)
+    val (qlo, qhi) = Similarity.bqPackLocal(qv, s.q)
+    val shortlist = s.live(spark, store.read(spark, index), where = where)
+      .select(col(s.idCol),
         (bit_count(col("bq_lo").bitwiseXOR(lit(qlo))) +
           bit_count(col("bq_hi").bitwiseXOR(lit(qhi))))
           .cast("int").as("hamming"))
-      .orderBy(col("hamming"), col(idCol))
+      .orderBy(col("hamming"), col(s.idCol))
       .limit(k * rerank)
-    // rerank fetch: the live vectors AS OF THE WATERMARK (point-in-time
-    // discipline — a mutation landing between refresh and search must
-    // not tear the snapshot), bounded id join
-    mc.readLiveAt(spark, w).select(col(idCol), col(vecCol))
-      .join(broadcast(shortlist), Seq(idCol))
-      .withColumn("cosine", round(cosine(col(vecCol), vecLit(qv)), 6))
-      .orderBy(col("cosine").desc, col(idCol))
+    s.liveVectors(spark)
+      .join(broadcast(shortlist), Seq(s.idCol))
+      .withColumn("cosine", round(cosine(col(s.vecCol), vecLit(qv)), 6))
+      .orderBy(col("cosine").desc, col(s.idCol))
       .limit(k)
-      .select(col(idCol), col("hamming"), col("cosine"))
+      .select(col(s.idCol), col("hamming"), col("cosine"))
   }
-
-  private def writeMeta(store: VectorStore, index: String,
-                        vecCol: String, idCol: String, dim: Int): Unit = {
-    val props = new java.util.Properties()
-    props.setProperty("vecCol", vecCol)
-    props.setProperty("idCol", idCol)
-    props.setProperty("dim", dim.toString)
-    StoreFs.forPath(store.root).writePropsAtomic(
-      s"${store.root}/$index/$MetaFile", props, "graft mutable-bq meta")
-  }
-
-  private def readMeta(store: VectorStore, index: String): (String, String, Int) = {
-    val props = StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$MetaFile")
-      .getOrElse(throw new IllegalArgumentException(
-        s"'$index' carries no BQ meta — build it with MutableBq.attach"))
-    (props.getProperty("vecCol"), props.getProperty("idCol"),
-      props.getProperty("dim").toInt)
-  }
-
-  private def writeWatermark(store: VectorStore, index: String, seq: Long,
-      collection: String): Unit =
-    MutableVacuum.writeWatermark(store, index, seq, collection, "bq")
-
-  private def readWatermark(store: VectorStore, index: String): Long =
-    StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$WatermarkFile")
-      .fold(0L)(_.getProperty("seq", "0").toLong)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.store.{MutableCollection, StoreFs, VectorStore}
+import graft.store.{MutableCollection, VectorStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,13 +30,10 @@ import org.apache.spark.sql.functions._
   *    receiving upserts is never rebuilt by refresh — under sustained
   *    churn its waypoint fraction grows without bound, which is what
   *    the threshold-gated [[vacuum]] verb exists to cut;
-  *  - '''consistency is point-in-time at the indexed watermark''', same
-  *    as the whole family: search bounds emitted candidates with an
-  *    explicit `seq <= watermark` filter (the sibling families' rule),
-  *    so nodes indexed PAST the watermark — rows racing [[attach]]'s
-  *    corpus scan, or cells rebuilt by a [[refresh]] that crashed before
-  *    its watermark advance — never surface as future versions. The one
-  *    DOCUMENTED residual after a crashed refresh: rebuilt cells were
+  *  - '''consistency is point-in-time at the indexed watermark''' — the
+  *    [[MutableIndex]] tier's rule and version resolution, applied to
+  *    the walk's emitted candidates. The one DOCUMENTED residual after
+  *    a crashed refresh: rebuilt cells were
   *    rewritten from the live-as-of-`to` view, so a pre-mutation version
   *    that was live at the old watermark no longer has a node in a
   *    REBUILT cell — reads between the crash and the (idempotent) re-run
@@ -48,15 +45,49 @@ import org.apache.spark.sql.functions._
   *
   * Search = partition-pruned probe (frozen router, the family's
   * floor-rounded lowest-cid rule), per-cell beam walk over ALL nodes
-  * (live and waypoint), then the shared tombstone filter + per-id dedup
-  * + exact top-k over the emitted `nprobe·ef` candidates. Approximate
-  * by construction (walk + waypoint recall) ⇒ rows-only gate; the
+  * (live and waypoint), then version resolution + exact top-k over the
+  * emitted `nprobe·ef` candidates. Approximate by construction (walk +
+  * waypoint recall) ⇒ rows-only gate; the
   * exhaustive configuration equals exact kNN over the live state
   * (spec-pinned), and recall is pinned beside the immutable graph's. */
 object MutableGraph {
 
-  private val RouterFile = "_router.properties"
-  private val WatermarkFile = "_indexed.properties"
+  private type Router = (Array[Array[Float]], Int, Int) // (cents, m, efConstruction)
+
+  private val family = new MutableIndex.Family[Router](
+      "graph", "_router.properties", "router", Seq("cell_id")) {
+    /** live-resolved (id, vec, seq) rows → per-cell NSW node rows */
+    def encode(live: DataFrame, vecCol: String, r: Router): DataFrame =
+      buildCells(assigned(live, r._1), r._2, r._3)
+    protected def putFields(props: java.util.Properties, r: Router): Unit = {
+      props.setProperty("m", r._2.toString)
+      props.setProperty("efConstruction", r._3.toString)
+      Similarity.putCells(props, r._1.zipWithIndex.map(_.swap))
+    }
+    protected def getFields(props: java.util.Properties): Router =
+      (Similarity.readCells(props).map(_._2), props.getProperty("m").toInt,
+        props.getProperty("efConstruction").toInt)
+    /** a cell's NSW graph cannot hold two versions of one id */
+    override protected def attachRows(spark: SparkSession, store: VectorStore,
+        mc: MutableCollection, vecCol: String): DataFrame =
+      liveRows(spark, store, mc, vecCol, asOf = None)
+    /** buildCells already co-locates each cell */
+    override protected def layout(rows: DataFrame): DataFrame = rows
+    /** rebuild the cells the delta touches from their live-as-of-`to`
+      * members — O(touched cells), never the collection */
+    override protected def writeDelta(spark: SparkSession, store: VectorStore,
+        mc: MutableCollection, index: String, delta: DataFrame,
+        vecCol: String, r: Router, to: Long): Unit = {
+      // bounded collect: <= ncells touched cell ids
+      val touched = delta
+        .select(Clustering.assignStruct(col(vecCol).cast("array<float>"), r._1)
+          .getField("cid").as("cell_id"))
+        .distinct().collect().map(_.getInt(0)).sorted
+      if (touched.nonEmpty)
+        store.overwritePartitions(index,
+          rebuiltCells(spark, store, mc, vecCol, r, to, touched), Seq("cell_id"))
+    }
+  }
 
   /** Live rows (id, vec, seq) as of `asOf` — the collection's own
     * tombstone-merge rule over its version history. */
@@ -91,58 +122,41 @@ object MutableGraph {
       .toDF("cell_id", "id", "vec", "neighbors", "seq")
   }
 
+  private def assigned(live: DataFrame, cents: Array[Array[Float]]): DataFrame =
+    live.withColumn("cell_id",
+      Clustering.assignStruct(col("vec"), cents).getField("cid"))
+
+  /** `cells` rebuilt from their members live as of `asOf`, assigned by
+    * the FROZEN router. EAGER pin: the rebuilt rows read the same path
+    * the dynamic overwrite that follows rewrites (the insertIntoStored
+    * discipline). */
+  private def rebuiltCells(spark: SparkSession, store: VectorStore,
+      mc: MutableCollection, vecCol: String, r: Router, asOf: Long,
+      cells: Array[Int]): DataFrame = {
+    val members = assigned(liveRows(spark, store, mc, vecCol, Some(asOf)), r._1)
+      .filter(col("cell_id").isin(cells.map(Int.box).toIndexedSeq: _*))
+    buildCells(members, r._2, r._3).localCheckpoint(true)
+  }
+
   /** Build the graph over the collection's LIVE state: train the router
     * on the live vectors, build each cell's NSW from live-resolved
     * members, persist router + watermark. Returns the frozen router. */
   def attach(spark: SparkSession, store: VectorStore, collection: String,
              vecCol: String, index: String, ncells: Int = 8,
              iters: Int = 2, m: Int = 8,
-             efConstruction: Int = 32): Array[Array[Float]] = {
-    val mc = store.mutable(collection)
-    val watermark = mc.currentSeq // BEFORE reading — the family rule
-    val live = liveRows(spark, store, mc, vecCol, asOf = None)
-    val cents = Clustering.trainCentroids(live, ncells, iters, "id", "vec")
-    val assigned = live.withColumn("cell_id",
-      Clustering.assignStruct(col("vec"), cents).getField("cid"))
-    store.create(index, buildCells(assigned, m, efConstruction),
-      partitionBy = Seq("cell_id"))
-    writeRouter(store, index, cents, vecCol, mc.idCol, m, efConstruction)
-    writeWatermark(store, index, watermark, collection)
-    cents
-  }
+             efConstruction: Int = 32): Array[Array[Float]] =
+    family.attach(spark, store, collection, vecCol, index) { (live, _) =>
+      (Clustering.trainCentroids(live, ncells, iters, "id", "vec"), m,
+        efConstruction)
+    }._1
 
   /** Rebuild the cells touched by versions written since the last
     * refresh, from the live-as-of-now members of those cells —
     * O(touched cells), never the collection. Returns the new
     * watermark. */
   def refresh(spark: SparkSession, store: VectorStore,
-              collection: String, index: String): Long = {
-    val mc = store.mutable(collection)
-    val from = readWatermark(store, index)
-    val to = mc.currentSeq
-    if (to == from) return to
-    val (cents, vecCol, _, m, efC) = readRouter(store, index)
-    val delta = store.read(spark, collection)
-      .filter(col(MutableCollection.SeqCol) > from &&
-        col(MutableCollection.SeqCol) <= to)
-    // bounded collect: <= ncells touched cell ids
-    val touched = delta
-      .select(Clustering.assignStruct(col(vecCol).cast("array<float>"), cents)
-        .getField("cid").as("cell_id"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    if (touched.nonEmpty) {
-      val members = liveRows(spark, store, mc, vecCol, asOf = Some(to))
-        .withColumn("cell_id",
-          Clustering.assignStruct(col("vec"), cents).getField("cid"))
-        .filter(col("cell_id").isin(touched.map(Int.box).toIndexedSeq: _*))
-      // EAGER pin: the rebuilt rows read the same path the dynamic
-      // overwrite below rewrites (the insertIntoStored discipline)
-      val rebuilt = buildCells(members, m, efC).localCheckpoint(true)
-      store.overwritePartitions(index, rebuilt, Seq("cell_id"))
-    }
-    writeWatermark(store, index, to, collection) // AFTER the rewrite — crash model
-    to
-  }
+              collection: String, index: String): Long =
+    family.refresh(spark, store, collection, index)
 
   /** VACUUM the graph's routing-waypoint garbage — the verb [[refresh]]
     * deliberately is not: refresh rebuilds the cells upserts TOUCH, so a
@@ -185,8 +199,8 @@ object MutableGraph {
              index: String, maxGarbagePpm: Long = 200000L,
              precomputedReport: Option[DataFrame] = None): Array[Int] = {
     val mc = store.mutable(collection)
-    val w = readWatermark(store, index)
-    val (cents, vecCol, _, m, efC) = readRouter(store, index)
+    val w = MutableIndex.readWatermark(store, index)
+    val (r, vecCol, _) = family.sidecar(store, index)
     // bounded collect: the report is one row per cell; a caller that
     // already ran the report on the CURRENT state hands it in and the
     // verb's only pre-rewrite O(index) read is not paid twice
@@ -196,13 +210,8 @@ object MutableGraph {
       .filter(col("n_garbage") > 0L && col("garbage_ppm") > maxGarbagePpm)
       .select("cell_id").collect().map(_.getInt(0)).sorted
     if (dirty.isEmpty) return dirty
-    val members = liveRows(spark, store, mc, vecCol, asOf = Some(w))
-      .withColumn("cell_id",
-        Clustering.assignStruct(col("vec"), cents).getField("cid"))
-      .filter(col("cell_id").isin(dirty.map(Int.box).toIndexedSeq: _*))
     val schema = store.read(spark, index).schema
-    // EAGER pin: the rebuild reads the files the overwrite rewrites
-    val rebuilt = buildCells(members, m, efC).localCheckpoint(true)
+    val rebuilt = rebuiltCells(spark, store, mc, vecCol, r, w, dirty)
     val nonEmpty = rebuilt.select(col("cell_id").cast("int"))
       .distinct().collect().map(_.getInt(0)).toSet
     store.overwritePartitions(index, rebuilt, Seq("cell_id"))
@@ -216,9 +225,9 @@ object MutableGraph {
   /** Top-k over the live collection as of the index watermark: probe
     * `nprobe` cells (frozen router), beam-walk each cell's FULL node
     * set (waypoints included — they route), emit `ef` candidates per
-    * cell with their node seq, then resolve liveness with the shared
-    * tombstone filter, dedup per id, and cut the exact top-k by the
-    * repo's (floor-rounded dist, id) order.
+    * cell with their node seq, then resolve versions (the
+    * [[MutableIndex]] rule) and cut the exact top-k by the repo's
+    * (floor-rounded dist, id) order.
     *
     * `where` is the Chroma `query(where={...})` filter over CURRENT
     * metadata: graph nodes carry no metadata (they are walk structure),
@@ -230,10 +239,9 @@ object MutableGraph {
              index: String, qv: Array[Double], k: Int, nprobe: Int,
              ef: Int, where: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val mc = store.mutable(collection)
-    val (cents, _, idCol, _, _) = readRouter(store, index)
-    val w = readWatermark(store, index)
-    val probed = Similarity.sqProbeCells(cents, qv, nprobe)
+    val s = family.snapshot(store, collection, index)
+    val idCol = s.idCol
+    val probed = Similarity.sqProbeCells(s.q._1, qv, nprobe)
     val qf = qv.map(_.toFloat)
     val cand = store.read(spark, index)
       .filter(col("cell_id").isin(probed.map(Int.box).toIndexedSeq: _*)) // PartitionFilters
@@ -257,19 +265,17 @@ object MutableGraph {
       .toDF("cell_id", idCol, "_d", MutableCollection.SeqCol)
     // waypoints (deleted / superseded versions) drop here, on the SAME
     // rule the collection's own reads use; dedup guards the id that
-    // surfaces from two probed cells (old-cell waypoint + new home).
-    // The explicit seq bound (the sibling families' point-in-time rule)
-    // drops nodes indexed PAST the watermark — rows that raced attach's
-    // corpus scan, or cells rebuilt by a refresh that crashed before
-    // its watermark advance — so emitted results never show the future.
-    val live = mc.applyTombstoneFilter(
-        spark, cand.filter(col(MutableCollection.SeqCol) <= w), asOf = Some(w))
-      .dropDuplicates(idCol)
+    // surfaces from two probed cells (old-cell waypoint + new home); the
+    // seq bound drops nodes indexed PAST the watermark — rows that raced
+    // attach's corpus scan, or cells rebuilt by a refresh that crashed
+    // before its watermark advance — so emitted results never show the
+    // future
+    val live = s.live(spark, cand)
     // metadata filter: bounded join (<= nprobe·ef candidate rows)
     // against the watermark live view's CURRENT columns
     val filtered = where.fold(live) { j =>
       live.join(
-        mc.readLiveAt(spark, w).filter(graft.query.WhereDsl.parse(j))
+        s.mc.readLiveAt(spark, s.w).filter(graft.query.WhereDsl.parse(j))
           .select(col(idCol)),
         Seq(idCol), "left_semi")
     }
@@ -279,44 +285,4 @@ object MutableGraph {
       .limit(k)
       .select(col(idCol).as("vec_id"), col("cell_id"), col("dist"))
   }
-
-  private def writeRouter(store: VectorStore, index: String,
-      cents: Array[Array[Float]], vecCol: String, idCol: String,
-      m: Int, efC: Int): Unit = {
-    val props = new java.util.Properties()
-    props.setProperty("vecCol", vecCol)
-    props.setProperty("idCol", idCol)
-    props.setProperty("m", m.toString)
-    props.setProperty("efConstruction", efC.toString)
-    cents.zipWithIndex.foreach { case (c, cid) =>
-      props.setProperty(s"cell.$cid", c.map(_.toString).mkString(","))
-    }
-    StoreFs.forPath(store.root).writePropsAtomic(
-      s"${store.root}/$index/$RouterFile", props, "graft mutable-graph router")
-  }
-
-  private def readRouter(store: VectorStore, index: String)
-      : (Array[Array[Float]], String, String, Int, Int) = {
-    val props = StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$RouterFile")
-      .getOrElse(throw new IllegalArgumentException(
-        s"'$index' carries no router — build it with MutableGraph.attach"))
-    import scala.jdk.CollectionConverters._
-    val cents = props.stringPropertyNames().asScala.toSeq
-      .filter(_.startsWith("cell."))
-      .map(key => (key.stripPrefix("cell.").toInt,
-        props.getProperty(key).split(",").map(_.toFloat)))
-      .sortBy(_._1).map(_._2).toArray
-    (cents, props.getProperty("vecCol"), props.getProperty("idCol"),
-      props.getProperty("m").toInt, props.getProperty("efConstruction").toInt)
-  }
-
-  private def writeWatermark(store: VectorStore, index: String, seq: Long,
-      collection: String): Unit =
-    MutableVacuum.writeWatermark(store, index, seq, collection, "graph")
-
-  private def readWatermark(store: VectorStore, index: String): Long =
-    StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$WatermarkFile")
-      .fold(0L)(_.getProperty("seq", "0").toLong)
 }

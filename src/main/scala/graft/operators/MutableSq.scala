@@ -1,35 +1,20 @@
 package graft.operators
 
-import graft.store.{MutableCollection, StoreFs, VectorStore}
+import graft.store.VectorStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** COMPRESSED ANN over a LIVE mutable collection — [[MutableIvf]]'s
-  * merge-on-read discipline generalized to the int8-SQ encode family,
-  * so a mutable collection can carry a compressed index: same cell
-  * layout, CODES instead of vectors (1 byte/dim — at 100 TB the live
-  * index is ~4× smaller than the mutable-IVF one and the probe scan
-  * reads code bytes, never floats).
+/** COMPRESSED ANN over a LIVE mutable collection — the int8-SQ member
+  * of the [[MutableIndex]] tier: the [[MutableIvf]] cell layout with
+  * CODES instead of vectors (1 byte/dim — at 100 TB the live index is
+  * ~4× smaller than the mutable-IVF one and the probe scan reads code
+  * bytes, never floats).
   *
-  * Everything that made the IVF variant consistent carries over
-  * unchanged, because none of it touched the payload representation:
-  *
-  *  - the index stores every row VERSION (id, metadata, seq, cell_id,
-  *    sq_code) and search applies the collection's OWN tombstone filter
-  *    ([[MutableCollection.applyTombstoneFilter]] — shared code) after
-  *    the partition-pruned probe, so deletes need NO index maintenance;
-  *  - upserts reach it through an O(delta) seq-pruned [[refresh]];
-  *  - consistency is point-in-time at the index watermark; crash
-  *    duplicates from a refresh that died between append and watermark
-  *    advance are collapsed by the bounded per-id dedup.
-  *
-  * What is NEW is the frozen artifact set: the router (centroids) AND
-  * the scalar quantizer (per-dim min/max) freeze at [[attach]] and
-  * persist in one sidecar — refresh encodes arrivals with the frozen
-  * ranges (pure arithmetic, codes may leave [0,255] when drift pushes a
-  * dim outside its fitted range — deterministic, same trade as
-  * [[Similarity.insertIntoStoredSq]]), and quantizer drift is healed by
-  * a periodic re-[[attach]], the family policy.
+  * The frozen artifact is the router (centroids) AND the scalar
+  * quantizer (per-dim min/max), persisted in one sidecar — refresh
+  * encodes arrivals with the frozen ranges (pure arithmetic, codes may
+  * leave [0,255] when drift pushes a dim outside its fitted range —
+  * deterministic, same trade as [[Similarity.insertIntoStoredSq]]).
   *
   * Search semantics: candidates score by the fused dequantize+l2 ADC
   * kernel ([[graft.functions.VectorFunctions.sqAdc]]) — the int8
@@ -41,22 +26,38 @@ import org.apache.spark.sql.functions._
   * hash — the property the SQ family was chosen for. */
 object MutableSq {
 
-  private val QuantFile = "_sq_quantizer.properties"
-  private val WatermarkFile = "_indexed.properties"
+  private type Quantizer = (Array[Array[Float]], Array[Double], Array[Double])
 
-  /** The encode projection shared by attach and refresh — one seam so
-    * build and delta can never disagree on the quantizer arithmetic:
-    * every collection column except the raw vector, plus (cell_id,
-    * sq_code). */
-  private def encodeRows(rows: DataFrame, vecCol: String,
-      cents: Array[Array[Float]], mins: Array[Double],
-      maxs: Array[Double]): DataFrame = {
-    import graft.functions.VectorFunctions.sqEncode
-    rows
-      .withColumn("cell_id",
-        Clustering.assignStruct(col(vecCol), cents).getField("cid"))
-      .withColumn("sq_code", sqEncode(col(vecCol), mins, maxs))
-      .drop(vecCol)
+  /** Sidecar keys `dim`, `min.$i`, `max.$i` — NOT the stored tier's
+    * `mins`/`maxs` (both formats stay readable as written). */
+  private val family = new MutableIndex.Family[Quantizer](
+      "sq", "_sq_quantizer.properties", "quantizer", Seq("cell_id")) {
+    /** every collection column except the raw vector, plus (cell_id,
+      * sq_code) */
+    def encode(rows: DataFrame, vecCol: String, q: Quantizer): DataFrame = {
+      import graft.functions.VectorFunctions.sqEncode
+      val (cents, mins, maxs) = q
+      rows
+        .withColumn("cell_id",
+          Clustering.assignStruct(col(vecCol), cents).getField("cid"))
+        .withColumn("sq_code", sqEncode(col(vecCol), mins, maxs))
+        .drop(vecCol)
+    }
+    protected def putFields(props: java.util.Properties, q: Quantizer): Unit = {
+      val (cents, mins, maxs) = q
+      props.setProperty("dim", mins.length.toString)
+      Similarity.putCells(props, cents.zipWithIndex.map(_.swap))
+      mins.indices.foreach { i =>
+        props.setProperty(s"min.$i", mins(i).toString)
+        props.setProperty(s"max.$i", maxs(i).toString)
+      }
+    }
+    protected def getFields(props: java.util.Properties): Quantizer = {
+      val dim = props.getProperty("dim").toInt
+      (Similarity.readCells(props).map(_._2),
+        Array.tabulate(dim)(i => props.getProperty(s"min.$i").toDouble),
+        Array.tabulate(dim)(i => props.getProperty(s"max.$i").toDouble))
+    }
   }
 
   /** Build the SQ index over the collection's CURRENT rows (all
@@ -66,117 +67,41 @@ object MutableSq {
     * quantizer, record the indexed watermark. */
   def attach(spark: SparkSession, store: VectorStore, collection: String,
              vecCol: String, index: String, ncells: Int = 8,
-             iters: Int = 2): (Array[Array[Float]], Array[Double], Array[Double]) = {
-    val mc = store.mutable(collection)
-    val watermark = mc.currentSeq // BEFORE reading — the MutableIvf rule:
-    // rows landing mid-build are re-indexed by the next refresh and the
-    // crash-duplicate dedup absorbs the overlap
-    val raw = store.read(spark, collection)
-    val cents = Clustering.trainCentroids(raw, ncells, iters, mc.idCol, vecCol)
-    val (mins, maxs) = Similarity.sqMinMax(raw, vecCol)
-    store.create(index,
-      Similarity.clusterByCell(encodeRows(raw, vecCol, cents, mins, maxs)),
-      partitionBy = Seq("cell_id"))
-    writeQuantizer(store, index, cents, mins, maxs, vecCol, mc.idCol)
-    writeWatermark(store, index, watermark, collection)
-    (cents, mins, maxs)
-  }
+             iters: Int = 2): (Array[Array[Float]], Array[Double], Array[Double]) =
+    family.attach(spark, store, collection, vecCol, index) { (raw, idCol) =>
+      val cents = Clustering.trainCentroids(raw, ncells, iters, idCol, vecCol)
+      val (mins, maxs) = Similarity.sqMinMax(raw, vecCol)
+      (cents, mins, maxs)
+    }
 
   /** Index the rows written since the last refresh — O(delta), frozen
-    * quantizer (see class doc). Returns the new watermark. */
+    * quantizer. Returns the new watermark. */
   def refresh(spark: SparkSession, store: VectorStore,
-              collection: String, index: String): Long = {
-    val mc = store.mutable(collection)
-    val from = readWatermark(store, index)
-    val to = mc.currentSeq
-    if (to == from) return to
-    val (cents, mins, maxs, vecCol, _) = readQuantizer(store, index)
-    val delta = store.read(spark, collection)
-      .filter(col(MutableCollection.SeqCol) > from &&
-        col(MutableCollection.SeqCol) <= to)
-    store.append(index,
-      Similarity.clusterByCell(encodeRows(delta, vecCol, cents, mins, maxs)),
-      partitionBy = Seq("cell_id"))
-    writeWatermark(store, index, to, collection) // AFTER the append — crash model
-    to
-  }
+              collection: String, index: String): Long =
+    family.refresh(spark, store, collection, index)
 
   /** Top-k over the live collection as of the index watermark:
     * partition-pruned probe (same floor-rounded lowest-cid probe rule
-    * as every SQ search), shared tombstone filter, optional where-DSL
-    * over current metadata, crash-duplicate dedup, fused ADC distance.
-    * Returns (idCol, cell_id, dist) with the repo's 6-decimal floor
-    * rounding (selection on the unrounded double). */
+    * as every SQ search), version resolution with the optional
+    * where-DSL over current metadata, fused ADC distance. Returns
+    * (idCol, cell_id, dist) with the repo's 6-decimal floor rounding. */
   def search(spark: SparkSession, store: VectorStore, collection: String,
              index: String, qv: Array[Double], k: Int, nprobe: Int,
              where: Option[String] = None): DataFrame = {
     import graft.functions.VectorFunctions.sqAdc
-    val mc = store.mutable(collection)
-    val (cents, mins, maxs, _, idCol) = readQuantizer(store, index)
-    val w = readWatermark(store, index)
+    val s = family.snapshot(store, collection, index)
+    val (cents, mins, maxs) = s.q
     val scales = Array.tabulate(mins.length)(i => (maxs(i) - mins(i)) / 255)
     val probed = Similarity.sqProbeCells(cents, qv, nprobe)
-    val cand = store.read(spark, index)
-      .filter(col("cell_id").isin(probed.map(Int.box).toIndexedSeq: _*)) // PartitionFilters
-      .filter(col(MutableCollection.SeqCol) <= w) // point-in-time bound
-    val live = mc.applyTombstoneFilter(spark, cand, asOf = Some(w))
-    where.fold(live)(j => live.filter(graft.query.WhereDsl.parse(j)))
-      .dropDuplicates(idCol) // crash-duplicate guard (see MutableIvf)
+    s.live(spark, store.read(spark, index), Some(probed.toIndexedSeq), where)
       // rank on the ROUNDED distance — the SQ-family discipline
       // (sqSearchStored does the same): the floor-rounded micro-units
       // are what the gate oracle reproduces, so the top-k cut must
       // happen on them, not on a raw-double knife edge
       .withColumn("dist", floor(sqAdc(col("sq_code"), mins, scales, qv)
         * 1e6 + 0.5) / 1e6)
-      .orderBy(col("dist"), col(idCol))
+      .orderBy(col("dist"), col(s.idCol))
       .limit(k)
-      .select(col(idCol), col("cell_id").cast("int").as("cell_id"), col("dist"))
+      .select(col(s.idCol), col("cell_id").cast("int").as("cell_id"), col("dist"))
   }
-
-  private def writeQuantizer(store: VectorStore, index: String,
-      cents: Array[Array[Float]], mins: Array[Double], maxs: Array[Double],
-      vecCol: String, idCol: String): Unit = {
-    val props = new java.util.Properties()
-    props.setProperty("vecCol", vecCol)
-    props.setProperty("idCol", idCol)
-    props.setProperty("dim", mins.length.toString)
-    cents.zipWithIndex.foreach { case (c, cid) =>
-      // Float/Double.toString round-trip exactly — the persisted
-      // quantizer reproduces attach-time encode bit for bit
-      props.setProperty(s"cell.$cid", c.map(_.toString).mkString(","))
-    }
-    mins.indices.foreach { i =>
-      props.setProperty(s"min.$i", mins(i).toString)
-      props.setProperty(s"max.$i", maxs(i).toString)
-    }
-    StoreFs.forPath(store.root).writePropsAtomic(
-      s"${store.root}/$index/$QuantFile", props, "graft mutable-sq quantizer")
-  }
-
-  private def readQuantizer(store: VectorStore, index: String)
-      : (Array[Array[Float]], Array[Double], Array[Double], String, String) = {
-    val props = StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$QuantFile")
-      .getOrElse(throw new IllegalArgumentException(
-        s"'$index' carries no quantizer — build it with MutableSq.attach"))
-    import scala.jdk.CollectionConverters._
-    val cents = props.stringPropertyNames().asScala.toSeq
-      .filter(_.startsWith("cell."))
-      .map(k => (k.stripPrefix("cell.").toInt,
-        props.getProperty(k).split(",").map(_.toFloat)))
-      .sortBy(_._1).map(_._2).toArray
-    val dim = props.getProperty("dim").toInt
-    val mins = Array.tabulate(dim)(i => props.getProperty(s"min.$i").toDouble)
-    val maxs = Array.tabulate(dim)(i => props.getProperty(s"max.$i").toDouble)
-    (cents, mins, maxs, props.getProperty("vecCol"), props.getProperty("idCol"))
-  }
-
-  private def writeWatermark(store: VectorStore, index: String, seq: Long,
-      collection: String): Unit =
-    MutableVacuum.writeWatermark(store, index, seq, collection, "sq")
-
-  private def readWatermark(store: VectorStore, index: String): Long =
-    StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$WatermarkFile")
-      .fold(0L)(_.getProperty("seq", "0").toLong)
 }

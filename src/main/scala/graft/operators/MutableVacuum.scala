@@ -61,32 +61,7 @@ import org.apache.spark.sql.functions._
   * filtering), and re-running vacuum is idempotent. */
 object MutableVacuum {
 
-  /** Every mutable-index family records its indexed watermark under the
-    * same sidecar name — one constant, shared here rather than per-file
-    * privates, so vacuum can serve all of them. */
-  private[operators] val WatermarkFile = "_indexed.properties"
-
-  private[operators] def readWatermark(store: VectorStore, index: String): Long =
-    StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$WatermarkFile")
-      .fold(0L)(_.getProperty("seq", "0").toLong)
-
-  /** ONE watermark writer for all five families (was five identical
-    * privates): besides the indexed seq, the sidecar records WHICH
-    * collection the index serves — the binding that lets
-    * [[graft.store.VectorStore.indexCatalog]] surface per-index garbage
-    * columns without being handed an explicit index list (the r13/r14
-    * discoverability gap: the advisor existed but a user had to already
-    * know which indexes to ask about). */
-  private[operators] def writeWatermark(store: VectorStore, index: String,
-      seq: Long, collection: String, family: String): Unit = {
-    val props = new java.util.Properties()
-    props.setProperty("seq", seq.toString)
-    props.setProperty("collection", collection)
-    StoreFs.forPath(store.root).writePropsAtomic(
-      s"${store.root}/$index/$WatermarkFile", props,
-      s"graft mutable-$family indexed watermark")
-  }
+  import MutableIndex.{readWatermark, WatermarkFile}
 
   /** The collection an index's watermark sidecar binds it to, if any. */
   def boundCollection(store: VectorStore, index: String): Option[String] =

@@ -421,11 +421,7 @@ object Similarity {
                                        name: String,
                                        cents: Array[(Int, Array[Float])]): Unit = {
     val props = new java.util.Properties()
-    cents.foreach { case (cid, c) =>
-      // Float.toString round-trips exactly — the persisted router
-      // reproduces build-time assignment bit for bit
-      props.setProperty(s"cell.$cid", c.map(_.toString).mkString(","))
-    }
+    putCells(props, cents)
     graft.store.StoreFs.forPath(store.root).writePropsAtomic(
       s"${store.root}/$name/$RouterFile", props, "graft stored-ivf router")
   }
@@ -435,14 +431,41 @@ object Similarity {
                        name: String): Option[Array[(Int, Array[Float])]] =
     graft.store.StoreFs.forPath(store.root)
       .readProps(s"${store.root}/$name/$RouterFile")
-      .map { props =>
-        import scala.jdk.CollectionConverters._
-        props.stringPropertyNames().asScala.toSeq
-          .filter(_.startsWith("cell."))
-          .map(key => (key.stripPrefix("cell.").toInt,
-            props.getProperty(key).split(",").map(_.toFloat)))
-          .sortBy(_._1).toArray
-      }
+      .map(readCells(_))
+
+  /** THE centroid sidecar codec — every router, quantizer and codebook
+    * sidecar (stored and mutable tiers) writes its float rows as
+    * `$prefix$id` → comma-joined `Float.toString`, which round-trips
+    * exactly, so a persisted artifact reproduces build-time assignment,
+    * encode and probe arithmetic bit for bit. */
+  private[graft] def putCells(props: java.util.Properties,
+                              cells: Iterable[(Int, Array[Float])],
+                              prefix: String = "cell."): Unit =
+    cells.foreach { case (id, c) =>
+      props.setProperty(s"$prefix$id", c.map(_.toString).mkString(","))
+    }
+
+  /** [[putCells]]' reader: the `$prefix$id` rows, sorted by id. */
+  private[graft] def readCells(props: java.util.Properties,
+                               prefix: String = "cell."): Array[(Int, Array[Float])] = {
+    import scala.jdk.CollectionConverters._
+    props.stringPropertyNames().asScala.toArray
+      .filter(_.startsWith(prefix))
+      .map(k => (k.drop(prefix.length).toInt,
+        props.getProperty(k).split(",").map(_.toFloat)))
+      .sortBy(_._1)
+  }
+
+  /** A PQ codebook's `cb.$sub.$code` rows through the cell codec. */
+  private[graft] def putCodebookRows(props: java.util.Properties,
+                                     cb: PqCodebook): Unit =
+    cb.cents.zipWithIndex.foreach { case (rows, sub) =>
+      putCells(props, rows.zipWithIndex.map(_.swap), s"cb.$sub.")
+    }
+
+  private[graft] def readCodebookRows(props: java.util.Properties,
+                                      m: Int): Array[Array[Array[Float]]] =
+    Array.tabulate(m)(sub => readCells(props, s"cb.$sub.").map(_._2))
 
   // ----------------------------------- retrain advisor (router drift)
 
@@ -528,9 +551,7 @@ object Similarity {
       name: String, cents: Array[Array[Float]],
       mins: Array[Double], maxs: Array[Double]): Unit = {
     val props = new java.util.Properties()
-    cents.zipWithIndex.foreach { case (c, i) =>
-      props.setProperty(s"cell.$i", c.map(_.toString).mkString(","))
-    }
+    putCells(props, cents.zipWithIndex.map(_.swap))
     props.setProperty("mins", mins.map(_.toString).mkString(","))
     props.setProperty("maxs", maxs.map(_.toString).mkString(","))
     graft.store.StoreFs.forPath(store.root).writePropsAtomic(
@@ -542,13 +563,8 @@ object Similarity {
     graft.store.StoreFs.forPath(store.root)
       .readProps(s"${store.root}/$name/$SqQuantFile")
       .map { props =>
-        import scala.jdk.CollectionConverters._
-        val cents = props.stringPropertyNames().asScala.toSeq
-          .filter(_.startsWith("cell."))
-          .map(k => (k.stripPrefix("cell.").toInt,
-            props.getProperty(k).split(",").map(_.toFloat)))
-          .sortBy(_._1).map(_._2).toArray
-        (cents, props.getProperty("mins").split(",").map(_.toDouble),
+        (readCells(props).map(_._2),
+          props.getProperty("mins").split(",").map(_.toDouble),
           props.getProperty("maxs").split(",").map(_.toDouble))
       }
 
@@ -556,15 +572,11 @@ object Similarity {
       name: String, cents: Array[(Int, Array[Float])],
       cb: PqCodebook): Unit = {
     val props = new java.util.Properties()
-    cents.foreach { case (cid, c) =>
-      props.setProperty(s"cell.$cid", c.map(_.toString).mkString(","))
-    }
+    putCells(props, cents)
     props.setProperty("cb.m", cb.m.toString)
     props.setProperty("cb.dsub", cb.dsub.toString)
     props.setProperty("cb.ksub", cb.ksub.toString)
-    for (sub <- 0 until cb.m; code <- 0 until cb.ksub)
-      props.setProperty(s"cb.$sub.$code",
-        cb.cents(sub)(code).map(_.toString).mkString(","))
+    putCodebookRows(props, cb)
     graft.store.StoreFs.forPath(store.root).writePropsAtomic(
       s"${store.root}/$name/$PqCodebookFile", props, "graft stored-pq codebook")
   }
@@ -574,17 +586,9 @@ object Similarity {
     graft.store.StoreFs.forPath(store.root)
       .readProps(s"${store.root}/$name/$PqCodebookFile")
       .map { props =>
-        import scala.jdk.CollectionConverters._
-        val cents = props.stringPropertyNames().asScala.toSeq
-          .filter(_.startsWith("cell."))
-          .map(k => (k.stripPrefix("cell.").toInt,
-            props.getProperty(k).split(",").map(_.toFloat)))
-          .sortBy(_._1).toArray
-        val (m, dsub, ksub) = (props.getProperty("cb.m").toInt,
-          props.getProperty("cb.dsub").toInt, props.getProperty("cb.ksub").toInt)
-        val cbc = Array.tabulate(m, ksub)((sub, code) =>
-          props.getProperty(s"cb.$sub.$code").split(",").map(_.toFloat))
-        (cents, PqCodebook(m, dsub, ksub, cbc))
+        val m = props.getProperty("cb.m").toInt
+        (readCells(props), PqCodebook(m, props.getProperty("cb.dsub").toInt,
+          props.getProperty("cb.ksub").toInt, readCodebookRows(props, m)))
       }
 
   /** RETRAIN ADVISOR for a stored-IVF layout — the decision operator the
@@ -660,16 +664,9 @@ object Similarity {
       .select(col(idCol), col("cosine"), col("rank"), col("index_kind"))
     kinds.collectFirst { case (n, "ivf") => n } match {
       case Some(n) =>
-        val cents = readStoredRouter(store, n).get
-        val probed = cents.map { case (id, c) =>
-          var acc = 0.0
-          var i = 0
-          val len = math.min(qv.length, c.length)
-          while (i < len) { val d = qv(i).toDouble - c(i); acc += d * d; i += 1 }
-          (acc, id)
-        }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2).toSeq
+        val probed = ivfProbeCells(readStoredRouter(store, n).get, qv, nprobe)
         finish(store.read(spark, n)
-          .filter(col("cell_id").isin(probed.map(Int.box): _*))
+          .filter(col("cell_id").isin(probed.map(Int.box).toIndexedSeq: _*))
           .withColumn("cosine", round(cosine(col(vecCol), vecLit(qv)), 6)),
           "ivf")
       case None => kinds.collectFirst { case (n, "bq") => n } match {
@@ -780,16 +777,7 @@ object Similarity {
                           cents: Array[(Int, Array[Float])],
                           queries: DataFrame, qIdCol: String, qVecCol: String,
                           k: Int = 10, nprobe: Int = 4): DataFrame = {
-    val probeUdf = udf((v: Seq[Float]) => {
-      val arr = v.toArray
-      cents.map { case (id, c) =>
-        var acc = 0.0
-        var i = 0
-        val n = math.min(arr.length, c.length)
-        while (i < n) { val d = arr(i).toDouble - c(i); acc += d * d; i += 1 }
-        (acc, id)
-      }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2)
-    })
+    val probeUdf = udf((v: Seq[Float]) => ivfProbeCells(cents, v.toArray, nprobe))
     val probes = queries.select(col(qIdCol), col(qVecCol),
       explode(probeUdf(col(qVecCol))).as("cell_id"))
     // bounded collect (<= ncells rows): the literal cell set the
@@ -830,16 +818,7 @@ object Similarity {
     val cents = centsOpt.getOrElse(
       trainCentroidArrays(collection, vecCol, idCol, ncells, trainIters))
     val indexed = withCellId(collection, vecCol, cents)
-    val probeUdf = udf((v: Seq[Float]) => {
-      val arr = v.toArray
-      cents.map { case (id, c) =>
-        var acc = 0.0
-        var i = 0
-        val n = math.min(arr.length, c.length)
-        while (i < n) { val d = arr(i).toDouble - c(i); acc += d * d; i += 1 }
-        (acc, id)
-      }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2)
-    })
+    val probeUdf = udf((v: Seq[Float]) => ivfProbeCells(cents, v.toArray, nprobe))
     val probes = queries.select(col(qIdCol), col(qVecCol),
       explode(probeUdf(col(qVecCol))).as("cell_id"))
     val w = Window.partitionBy(col(qIdCol))
@@ -1108,6 +1087,25 @@ object Similarity {
     head.getSeq[Int](2)
   }
 
+  /** ADC table for one (query, probed cell): squared l2 of the query's
+    * cell residual to every codeword of every subspace, in double. */
+  private[graft] def pqAdcTable(qv: Array[Float], cc: Array[Float],
+                                cb: PqCodebook): Array[Array[Double]] =
+    Array.tabulate(cb.m) { j =>
+      val cjs = cb.cents(j)
+      Array.tabulate(cjs.length) { c =>
+        var acc = 0.0
+        var i = 0
+        while (i < cb.dsub) {
+          val off = j * cb.dsub + i
+          val d = (qv(off).toDouble - cc(off)) - cjs(c)(i)
+          acc += d * d
+          i += 1
+        }
+        acc
+      }
+    }
+
   /** ADC search over an ALREADY-ENCODED relation (inline from
     * [[pqEncode]] or read back from the store): probed cells become a
     * LITERAL `cell_id IN (...)` filter — on the stored cell_id-partitioned
@@ -1129,30 +1127,8 @@ object Similarity {
     // per (query, probed cell): ADC table over the query's cell residual
     val probeTables: Map[(Long, Int), Array[Array[Double]]] = qRows.flatMap {
       case (qid, qv) =>
-        val probed = cents.map { case (id, c) =>
-          var acc = 0.0
-          var i = 0
-          val n = math.min(qv.length, c.length)
-          while (i < n) { val d = qv(i).toDouble - c(i); acc += d * d; i += 1 }
-          (acc, id)
-        }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2)
-        probed.map { cell =>
-          val cc = centById(cell)
-          val tab = Array.tabulate(cb.m) { j =>
-            val cjs = cb.cents(j)
-            Array.tabulate(cjs.length) { c =>
-              var acc = 0.0
-              var i = 0
-              while (i < cb.dsub) {
-                val off = j * cb.dsub + i
-                val d = (qv(off).toDouble - cc(off)) - cjs(c)(i)
-                acc += d * d
-                i += 1
-              }
-              acc
-            }
-          }
-          (qid, cell) -> tab
+        ivfProbeCells(cents, qv, nprobe).map { cell =>
+          (qid, cell) -> pqAdcTable(qv, centById(cell), cb)
         }
     }.toMap
     val adc = udf((qid: Long, cell: Int, code: Array[Byte]) => {
@@ -1485,6 +1461,21 @@ object Similarity {
     (cents, cb)
   }
 
+  /** THE raw-double IVF probe rule: the `nprobe` cells nearest `qv` by
+    * (Σ(qv(i).toDouble − c(i))², cid) — unrounded, lowest cid on ties.
+    * Every IVF-flat / IVF-PQ probe (inline, stored, mutable, batch, and
+    * the [[graft.plans.AnnProbeRule]] rewrite) runs it; the SQ/graph
+    * family's floor-rounded rule is [[sqProbeCells]]. */
+  private[graft] def ivfProbeCells(cents: Array[(Int, Array[Float])],
+                                   qv: Array[Float], nprobe: Int): Array[Int] =
+    cents.map { case (cid, c) =>
+      var acc = 0.0
+      var i = 0
+      val n = math.min(qv.length, c.length)
+      while (i < n) { val d = qv(i).toDouble - c(i); acc += d * d; i += 1 }
+      (acc, cid)
+    }.sortBy(identity).take(nprobe).map(_._2)
+
   /** The `nprobe` cells nearest the query, by the SAME arithmetic as the
     * assignment argmin (float→double subtraction, left-to-right double
     * accumulation, floor-rounded to 6 decimals, ties to the lower cid) —
@@ -1643,15 +1634,9 @@ object Similarity {
       rankTop(collection.filter(predicate), "pre")
     } else {
       val cents = trainCentroidArrays(collection, vecCol, idCol, ncells, trainIters)
-      val probed = cents.map { case (id, c) =>
-        var acc = 0.0
-        var i = 0
-        val len = math.min(qv.length, c.length)
-        while (i < len) { val d = qv(i).toDouble - c(i); acc += d * d; i += 1 }
-        (acc, id)
-      }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2).toSeq
+      val probed = ivfProbeCells(cents, qv, nprobe)
       rankTop(withCellId(collection, vecCol, cents)
-        .filter(col("cell_id").isin(probed.map(Int.box): _*) && predicate),
+        .filter(col("cell_id").isin(probed.map(Int.box).toIndexedSeq: _*) && predicate),
         "post")
     }
   }
@@ -1688,16 +1673,8 @@ object Similarity {
     val cents = centsOpt.getOrElse(
       trainCentroidArrays(collection, vecCol, idCol, ncells, trainIters))
     val indexed = withCellId(collection, vecCol, cents)
-    val probeOrderUdf = udf((v: Seq[Float]) => {
-      val arr = v.toArray
-      cents.map { case (id, c) =>
-        var acc = 0.0
-        var i = 0
-        val n = math.min(arr.length, c.length)
-        while (i < n) { val d = arr(i).toDouble - c(i); acc += d * d; i += 1 }
-        (acc, id)
-      }.sortBy(p => (p._1, p._2)).map(_._2)
-    })
+    val probeOrderUdf = udf((v: Seq[Float]) =>
+      ivfProbeCells(cents, v.toArray, cents.length))
     val maxP = nprobes.max
     val probeRanks = queries.select(col(qIdCol), col(qVecCol),
         posexplode(probeOrderUdf(col(qVecCol))).as(Seq("_pos", "cell_id")))
@@ -1838,16 +1815,8 @@ object Similarity {
     val spark = collection.sparkSession
     val cents = trainCentroidArrays(collection, vecCol, idCol, ncells, trainIters)
     val indexed = withCellId(collection, vecCol, cents)
-    val probeOrderUdf = udf((v: Seq[Float]) => {
-      val arr = v.toArray
-      cents.map { case (id, c) =>
-        var acc = 0.0
-        var i = 0
-        val n = math.min(arr.length, c.length)
-        while (i < n) { val d = arr(i).toDouble - c(i); acc += d * d; i += 1 }
-        (acc, id)
-      }.sortBy(p => (p._1, p._2)).map(_._2)
-    })
+    val probeOrderUdf = udf((v: Seq[Float]) =>
+      ivfProbeCells(cents, v.toArray, cents.length))
     val maxP = nprobes.max
     val probeRanks = queries.select(col(qIdCol), col(qVecCol),
         posexplode(probeOrderUdf(col(qVecCol))).as(Seq("_pos", "cell_id")))
@@ -2360,14 +2329,7 @@ object Similarity {
                      ncells: Int = 16, nprobe: Int = 4,
                      trainIters: Int = 3): DataFrame = {
     val cents = trainCentroidArrays(collection, vecCol, idCol, ncells, trainIters)
-    val qd = queryVec.map(_.toDouble)
-    val probed = cents.sortBy(_._1).map { case (cid, c) =>
-      var acc = 0.0
-      var i = 0
-      val n = math.min(qd.length, c.length)
-      while (i < n) { val d = qd(i) - c(i).toDouble; acc += d * d; i += 1 }
-      (acc, cid)
-    }.sortBy(identity).take(nprobe).map(_._2)
+    val probed = ivfProbeCells(cents, queryVec, nprobe)
     withCellId(collection, vecCol, cents)
       .filter(col("cell_id").isin(probed.map(Int.box).toIndexedSeq: _*))
       .withColumn("cosine", round(cosine(col(vecCol), vecLit(queryVec)), 6))
