@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   * top-k (per-partition heaps + driver merge), no global sort. At 100 TB the
   * scan is the cost; the filter and the two needed columns push into
   * Parquet, and k rows cross the network per partition.
+  *
+  * The context is built from ONE collected top-k: the ≤ k pieces arrive on
+  * the driver already in (distance, tie-breaker) order, and
+  * [[greedyContext]] takes their greedy prefix there, counting code points.
   */
 object Knn {
 
@@ -64,31 +68,22 @@ object Knn {
     joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Greedy length-capped context assembly (reference :289-314): pieces in
-    * ascending-distance order, keep while the running sum of piece lengths
-    * stays <= maxLen (STRICT prefix — the reference `break`s at the first
-    * overflow, so a later shorter piece is NOT admitted), join "\n---\n".
-    *
-    * The separator is NOT counted in the running length (matches the
-    * reference, which only sums `len(context_piece)`).
+  /** A greedy context: the joined text, how many pieces it kept and the
+    * sum of their lengths in code points. */
+  final case class Context(text: String, pieces: Int, chars: Long)
+
+  /** Greedy length-capped context assembly (reference :289-314) over pieces
+    * already in rank order, as collected from one top-k: keep pieces while
+    * the running sum of their lengths stays <= maxLen, stop at the first
+    * overflow (STRICT prefix — the reference `break`s, so a later shorter
+    * piece is NOT admitted), join with "\n---\n". The separator is NOT
+    * counted (the reference only sums `len(context_piece)`). Length is in
+    * code points, as Spark's `length` and Python's `len` count, not UTF-16
+    * units, so a non-BMP character counts once.
     */
-  def assembleContext(hits: DataFrame, pieceCol: Column, orderCol: Seq[Column],
-                      maxLen: Int): DataFrame = {
-    val w = Window.orderBy(orderCol: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withLen = hits.withColumn("_piece", pieceCol)
-      .withColumn("_cum", sum(length(col("_piece"))).over(w))
-      // strict prefix: admit row i iff cum(i) <= maxLen AND all rows before
-      // it were admitted; since cum is monotone over non-negative lengths,
-      // cum(i) <= maxLen alone IS the prefix property.
-      .filter(col("_cum") <= maxLen)
-    // collect_list gives no ordering guarantee after a shuffle; sort the
-    // collected (cum, piece) structs by the monotone cum instead.
-    withLen.agg(
-      coalesce(
-        array_join(transform(array_sort(collect_list(struct(col("_cum"), col("_piece")))),
-          s => s.getField("_piece")), "\n---\n"), lit("")).as("context"),
-      count(lit(1)).as("pieces_used"),
-      coalesce(max(col("_cum")), lit(0L)).as("context_chars"))
+  def greedyContext(pieces: Seq[String], maxLen: Int): Context = {
+    val cum = pieces.scanLeft(0L)((acc, p) => acc + p.codePointCount(0, p.length)).tail
+    val n = cum.indexWhere(_ > maxLen) match { case -1 => pieces.size; case i => i }
+    Context(pieces.take(n).mkString("\n---\n"), n, if (n == 0) 0L else cum(n - 1))
   }
 }

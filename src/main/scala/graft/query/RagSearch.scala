@@ -16,6 +16,9 @@ import org.apache.spark.sql.functions._
   */
 object RagSearch {
 
+  /** The reference's empty-query guard (RagWorkflow.py:30-32). */
+  private def blank(query: String): Boolean = query == null || query.trim.isEmpty
+
   /** Search a collection whose rows carry (id, content, embedding [+
     * metadata map]) for `query`, embedding it with `embed`.
     *
@@ -33,8 +36,7 @@ object RagSearch {
                    vecCol: String = "embedding",
                    metadataCols: Seq[String] = Seq("chunk_id", "doc_id"),
                    whereDocumentJson: Option[String] = None): SearchResult = {
-    if (query == null || query.trim.isEmpty)
-      return SearchResult(query, Seq.empty, 0, Some("Query text is required"))
+    if (blank(query)) return SearchResult(query, Seq.empty, 0, Some("Query text is required"))
     try {
       // where + where_document compose as a conjunction, both evaluated
       // BEFORE ranking (Chroma's query(where=..., where_document=...))
@@ -93,7 +95,14 @@ object RagSearch {
       whereJson, contentCol, idCol, vecCol, metadataCols, whereDocumentJson)
   }
 
-  /** `get_context_for_rag` (:289-314): top-10 search then greedy prefix. */
+  /** `get_context_for_rag` (:289-314): top-10 search then greedy prefix.
+    *
+    * One Spark job: the formatted pieces of the top-10 (ordered by distance,
+    * then id) are collected once and [[Knn.greedyContext]] keeps the greedy
+    * prefix on the driver, counting length in code points. A null or blank
+    * query returns "" and runs no job, as the reference's context call goes
+    * through `search_for_rag`'s guard (RagWorkflow.py:30-32).
+    */
   def contextForRag(collection: DataFrame,
                     query: String,
                     embed: String => Array[Float],
@@ -103,14 +112,14 @@ object RagSearch {
                     vecCol: String = "embedding",
                     sourceCol: String = "source",
                     chunkIdCol: String = "chunk_id"): String = {
-    val res = Knn.search(collection, vecCol, embed(query), k = 10,
-      tieBreaker = Some(col(idCol)))
-    if (res.isEmpty) return ""
+    if (blank(query)) return ""
     val piece = format_string("[Source: %s, Chunk: %s]\n%s\n",
       coalesce(col(sourceCol).cast("string"), lit("Unknown")),
       coalesce(col(chunkIdCol).cast("string"), lit("Unknown")),
       col(contentCol))
-    Knn.assembleContext(res, piece, Seq(col("distance"), col(idCol)), maxContextLength)
-      .select("context").head().getString(0)
+    val pieces = Knn.search(collection, vecCol, embed(query), k = 10,
+        tieBreaker = Some(col(idCol)))
+      .select(piece).collect().map(_.getString(0))
+    Knn.greedyContext(pieces.toSeq, maxContextLength).text
   }
 }

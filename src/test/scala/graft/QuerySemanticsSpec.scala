@@ -104,24 +104,19 @@ class QuerySemanticsSpec extends SparkSpec {
   }
 
   test("context assembly: greedy STRICT prefix — later shorter piece not admitted") {
-    val hits = Seq(
-      (1, 1.0, "a" * 100), (2, 2.0, "b" * 200), (3, 3.0, "c" * 250), (4, 4.0, "d" * 10)
-    ).toDF("id", "distance", "content")
+    val pieces = Seq("a" * 100, "b" * 200, "c" * 250, "d" * 10)
     // cap 350: piece1(100)+piece2(200)=300 fits; piece3(250) overflows =>
     // BREAK; piece4(10) would fit but must NOT be admitted
-    val out = Knn.assembleContext(hits, col("content"), Seq(col("distance")), maxLen = 350)
-      .collect().head
-    assert(out.getAs[Long]("pieces_used") == 2L)
-    assert(out.getAs[Long]("context_chars") == 300L)
-    val ctx = out.getAs[String]("context")
-    assert(ctx == ("a" * 100) + "\n---\n" + ("b" * 200))
+    val out = Knn.greedyContext(pieces, maxLen = 350)
+    assert(out.pieces == 2)
+    assert(out.chars == 300L)
+    assert(out.text == ("a" * 100) + "\n---\n" + ("b" * 200))
   }
 
   test("context assembly: empty hits -> empty context") {
-    val hits = Seq.empty[(Int, Double, String)].toDF("id", "distance", "content")
-    val out = Knn.assembleContext(hits, col("content"), Seq(col("distance")), 100).collect().head
-    assert(out.getAs[String]("context") == "")
-    assert(out.getAs[Long]("pieces_used") == 0L)
+    val out = Knn.greedyContext(Seq.empty, 100)
+    assert(out.text == "")
+    assert(out.pieces == 0 && out.chars == 0L)
   }
 
   test("as-of join: most recent prior right row per key, inclusive") {

@@ -71,10 +71,67 @@ class RagSearchSpec extends SparkSpec {
   }
 
   test("context_for_rag assembles capped context with source headers") {
-    val ctx = RagSearch.contextForRag(collection, "vector data", embedder.encodeOne,
-      maxContextLength = 2000)
-    assert(ctx.nonEmpty && ctx.length <= 2000 + 5 * 10) // pieces capped; separators uncounted (reference semantics)
-    assert(ctx.startsWith("[Source: "))
+    // 2-d rows at integral coordinates, so every distance is exact; the query
+    // vector is the origin whatever the text
+    def row(id: String, x: Float, y: Float, text: String,
+            source: Option[String] = Some("a.pdf"), chunkId: Option[String] = Some("c")) =
+      (id, source, chunkId, text, Array(x, y))
+    val emoji = "\uD83D\uDE00" * 60 // 60 code points, 120 UTF-16 units
+    val rows = Seq(
+      row("r01", 1, 0, "alpha"),
+      row("r03", 0, 2, "tie, larger id"),  // same distance as r02: r02 first
+      row("r02", 2, 0, "tie, smaller id"),
+      row("r04", 3, 0, "no metadata", source = None, chunkId = None),
+      row("r05", 4, 0, s"smile $emoji"),
+      row("r06", 5, 0, "w" * 80),          // overflows: the prefix stops here
+      row("r07", 6, 0, "z"),               // would fit, but comes after the break
+      row("r08", 7, 0, "h"), row("r09", 8, 0, "i"), row("r10", 9, 0, "j"),
+      row("r11", 10, 0, "past the top-10"), row("r12", 0, 11, "past the top-10"))
+    val fixture = rows.toDF("id", "source", "chunk_id", "chunk", "embedding")
+
+    // brute-force top-10 by (distance, id) and a hand-written greedy prefix
+    val top10 = rows.sortBy { case (id, _, _, _, v) => (v.map(x => x * x).sum.toDouble, id) }(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String)).take(10)
+    val pieces = top10.map { case (_, src, cid, text, _) =>
+      s"[Source: ${src.getOrElse("Unknown")}, Chunk: ${cid.getOrElse("Unknown")}]\n$text\n"
+    }
+    def greedy(len: String => Int, cap: Int): String = {
+      var total = 0
+      pieces.takeWhile { p => total += len(p); total <= cap }.mkString("\n---\n")
+    }
+    val codePoints = (p: String) => p.codePointCount(0, p.length)
+    val cap = pieces.take(5).map(codePoints).sum + 50
+    val want = greedy(codePoints, cap)
+    // the fixture exercises what it claims: the tie order, the null
+    // defaults, the emoji piece kept only when code points are counted,
+    // and a later piece that would fit after the break
+    assert(pieces.take(3).map(_.linesIterator.drop(1).next()) ==
+      Seq("alpha", "tie, smaller id", "tie, larger id"))
+    assert(want.contains("[Source: Unknown, Chunk: Unknown]\nno metadata\n"))
+    assert(want.contains(emoji) && !want.contains("www") && !want.contains("\nz\n"))
+    assert(codePoints(pieces(6)) <= cap - pieces.take(5).map(codePoints).sum)
+    assert(greedy(_.length, cap) != want)
+
+    def context(cap: Int) =
+      RagSearch.contextForRag(fixture, "any", _ => Array(0f, 0f), maxContextLength = cap)
+    assert(context(cap) == want)
+    // a cap that admits everything keeps exactly the top-10
+    assert(context(100000) == pieces.mkString("\n---\n"))
+    assert(context(0) == "")
+  }
+
+  test("context_for_rag runs one Spark job; a blank query returns empty and runs none") {
+    RagSearch.contextForRag(collection, "vector data", embedder.encodeOne) // cache warm
+    val (ctx, jobs) = countingJobs(
+      RagSearch.contextForRag(collection, "vector data", embedder.encodeOne))
+    assert(ctx.startsWith("[Source: ") && jobs == 1, s"$jobs jobs")
+    Seq(null, "", "   ").foreach { q =>
+      val (blank, none) = countingJobs(RagSearch.contextForRag(collection, q, embedder.encodeOne))
+      assert(blank == "" && none == 0, s"query '$q': ${blank.length} chars, $none jobs")
+    }
+    val (res, searchJobs) = countingJobs(
+      RagSearch.searchForRag(collection, "vector data", embedder.encodeOne))
+    assert(res.results.nonEmpty && searchJobs == 1, s"$searchJobs jobs")
   }
 
   test("jaccardAtLeast agrees with exact jaccard on random sorted sets") {
