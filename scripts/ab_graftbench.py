@@ -4,12 +4,15 @@ tree (NEW), run by run on the same seeds.
 
 Usage (from the repository root):
   python3 scripts/ab_graftbench.py --base HEAD~1 --workload rag_query \
-      --seeds 1-10 --seconds 10 [--trace 0|1] [--workdir .ab_build] [--out ab.json]
+      --seeds 1-10 [--trace 0|1] [--workdir .ab_build]
 
 OLD is `git archive <base> src graftbench BENCHMARK.json`, unpacked beside
-the working tree under --workdir. Each arm builds into its own
-CARGO_TARGET_DIR, because graftbench/build.py deletes the class
-directories of other source trees in a shared build directory. Both arms
+the working tree under --workdir (into a scratch directory that is renamed
+into place once the export is whole, so an interrupted export is never
+reused). Every run lasts the `run_seconds` that BENCHMARK.json sets.
+Each arm builds into its own CARGO_TARGET_DIR, because graftbench/build.py
+deletes the class directories of other source trees in a shared build
+directory. Both arms
 are built before the first run. Per seed, OLD and NEW run back to back as
 fresh processes; the order alternates (seed 1: OLD then NEW, seed 2: NEW
 then OLD, ...), so a host that speeds up or slows down over the comparison
@@ -54,14 +57,16 @@ def export(base, workdir):
     sha = subprocess.run(["git", "rev-parse", "--verify", base + "^{commit}"], cwd=ROOT,
                          check=True, capture_output=True, text=True).stdout.strip()
     tree = os.path.join(workdir, "old-" + sha[:12])
-    if not os.path.isfile(os.path.join(tree, "BENCHMARK.json")):
-        shutil.rmtree(tree, ignore_errors=True)
-        os.makedirs(tree)
+    if not os.path.isdir(tree):
+        part = tree + ".part"
+        shutil.rmtree(part, ignore_errors=True)
+        os.makedirs(part)
         archive = subprocess.Popen(["git", "archive", sha, "src", "graftbench", "BENCHMARK.json"],
                                    cwd=ROOT, stdout=subprocess.PIPE)
-        subprocess.run(["tar", "-x", "-C", tree], stdin=archive.stdout, check=True)
+        subprocess.run(["tar", "-x", "-C", part], stdin=archive.stdout, check=True)
         if archive.wait() != 0:
             raise SystemExit(f"git archive {base} failed")
+        os.rename(part, tree)
     return sha, tree
 
 
@@ -69,9 +74,9 @@ def arm_env(workdir, arm):
     return dict(os.environ, CARGO_TARGET_DIR=os.path.join(workdir, "target-" + arm))
 
 
-def run_one(tree, env, a, seed, log):
+def run_one(tree, env, a, seconds, seed, log):
     cmd = [sys.executable, os.path.join("graftbench", "run.py"), "--workload", a.workload,
-           "--seed", str(seed), "--seconds", str(a.seconds), "--trace", str(a.trace)]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(a.trace)]
     p = subprocess.run(cmd, cwd=tree, env=env, stdout=subprocess.PIPE, stderr=log, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
@@ -87,11 +92,13 @@ def main():
     ap.add_argument("--base", required=True, help="git revision of the OLD arm")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="1-10", help="e.g. 1-10 or 1,3,5-7")
-    ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--workdir", default=os.path.join(ROOT, ".ab_build"))
-    ap.add_argument("--out", help="also write every run's result here as JSON")
     a = ap.parse_args()
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        contract = json.load(f)
+    seconds = contract["run_seconds"]
+    e2e = {m["name"]: m["better"] for m in contract["end_to_end"]}
 
     workdir = os.path.abspath(a.workdir)
     os.makedirs(workdir, exist_ok=True)
@@ -110,17 +117,15 @@ def main():
             for name in (("OLD", "NEW") if i % 2 == 0 else ("NEW", "OLD")):
                 log.write(f"==== {name} seed {seed}\n")
                 log.flush()
-                r = run_one(*arms[name], a, seed, log)
+                r = run_one(*arms[name], a, seconds, seed, log)
                 results[name].append(r)
                 ok = r is not None and r["correct"] and r["failed"] == 0
                 print(f"seed {seed} {name}: {'ok' if ok else 'BAD'}", file=sys.stderr, flush=True)
 
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        e2e = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
     names = list(e2e) + sorted({k for r in results["NEW"] + results["OLD"] if r
                                for k in r["metrics"]} - set(e2e))
     print(f"workload {a.workload}, OLD {sha[:12]} vs NEW working tree, "
-          f"seeds {a.seeds}, --seconds {a.seconds}, --trace {a.trace}")
+          f"seeds {a.seeds}, --seconds {seconds}, --trace {a.trace}")
     print(f"{'metric':34} {'OLD med':>10} {'NEW med':>10} {'NEW/OLD':>8} "
           f"{'OLD iqr/m':>9} {'NEW iqr/m':>9} {'NEW won':>8} {'>OLD iqr':>8}")
     for m in names:
@@ -150,10 +155,6 @@ def main():
               f"{sum(r is not None and not r['correct'] for r in rs)} incorrect, "
               f"{sum(r is not None and r['failed'] > 0 for r in rs)} with failed calls")
     print(f"run logs: {log_path}")
-    if a.out:
-        with open(a.out, "w") as f:
-            json.dump({"base": sha, "workload": a.workload, "seeds": seeds(a.seeds),
-                       "seconds": a.seconds, "trace": a.trace, "runs": results}, f)
     return 0
 
 

@@ -2620,8 +2620,9 @@ object GraftQueries {
   /** RAG context assembly: top-10 hits joined to their documents, greedy
     * 2000-char prefix, "\n---\n" separator (reference get_context_for_rag).
     * The ≤ 10 joined pieces are collected in (distance, vec_id) order (the
-    * join does not keep it, hence the re-sort) and cut by
-    * [[Knn.greedyContext]]. */
+    * join does not keep it, hence the re-sort, which the limit lets
+    * Catalyst plan as a TakeOrderedAndProject rather than a global sort)
+    * and cut by [[Knn.greedyContext]]. */
   val ragContext: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -2632,7 +2633,8 @@ object GraftQueries {
       .join(Tables.documents(s, d), col("doc_id") === col("vec_id"))
     val piece = format_string("[Source: %s, Chunk: %s_chunk_0]\n%s\n",
       col("source"), col("doc_id"), col("text"))
-    val pieces = hits.orderBy("distance", "vec_id").select(piece).collect().map(_.getString(0))
+    val pieces = hits.orderBy("distance", "vec_id").select(piece).limit(10)
+      .collect().map(_.getString(0))
     val c = Knn.greedyContext(pieces.toSeq, maxLen = 2000)
     import s.implicits._
     Seq((c.text, c.pieces.toLong, c.chars)).toDF("context", "pieces_used", "context_chars")
